@@ -9,7 +9,7 @@ replaces the E× loop with ONE global plan:
       → eligible-entity broadcast semi-join (skip/limit semantics)
       → per-entity sampling: hash mode = row_number window on mid [shuffle,
         reused by the UDF stage]; parity mode = driver-side MT19937 ranks
-      → patterns = {label} ∪ mentions per entity, joined as array column
+      → patterns = {label} ∪ mentions per entity, broadcast-joined as array column
       → crop (token|sentence) + mask pandas UDFs with empty-row drops
       → mid→rid broadcast join → contexts
 
@@ -133,9 +133,11 @@ def build_contexts(
             )
 
     # patterns = {label} ∪ distinct mentions (ref :215-218); global agg
-    # replaces E point queries (SURVEY.md OPS-19)
+    # replaces E point queries (SURVEY.md OPS-19). One row per seed entity,
+    # so the join is an explicit broadcast: the repartition skip below
+    # relies on it not shuffling, whatever the size estimate says.
     pat = mentions.groupBy("mid").agg(F.collect_set("mention").alias("ms"))
-    ctx = ctx.join(pat, "mid", "left").withColumn(
+    ctx = ctx.join(F.broadcast(pat), "mid", "left").withColumn(
         "patterns",
         F.array_sort(
             F.array_distinct(

@@ -1,22 +1,20 @@
 """Phase-1 engine: documents (interleaved spans) → pages / matches / mentions.
 
 Re-expresses the reference's per-page worker pipeline
-(cmd/build_matches_db.py:237-320) as ONE declarative Spark plan:
+(cmd/build_matches_db.py:237-320) as ONE narrow Spark plan — every step
+is per page, so nothing is shuffled before the Python stage:
 
-    documents scan → OPS-7/8 filters → links explode
-      → broadcast semi-join on seed titles (OPS-13)
-      → (doc_id, mention) ambiguity agg (OPS-18)            [shuffle 1]
-      → per-doc mention-map agg                              [shuffle 1']
-      → join back to docs on doc_id                          [shuffle 2]
-      → clean + phrase-match pandas UDFs (OPS-30/31, narrow)
+    documents scan → OPS-7/8 filters
+      → plain text + link mentions/targets (JVM projection)
+      → page_matches_udf: mention map with the OPS-18 ambiguity drop,
+        clean text (OPS-30) and phrase matches (OPS-31) in ONE Arrow
+        round trip per page
+      → persist (only the columns the three outputs read)
       → pages / matches / mentions projections + PK dedup (OPS-14)
 
-Scale notes: the seed-title map is the only broadcast (small by
-construction — it is the crawl seed list); everything else shuffles on
-doc_id / (mid, mention), uniform keys. The mention→mid map rides along as
-a per-doc MAP column, so match→mid resolution is a JVM map lookup, not a
-second join. Catalyst prunes `spans` out of every branch that doesn't
-need it and splits both aggregates into partial+final.
+Scale notes: the seed-title map (OPS-13) reaches the Python workers as a
+Spark broadcast — small by construction, it is the crawl seed list. The
+only shuffles left are the three PK dedups on the outputs.
 """
 
 from __future__ import annotations
@@ -26,9 +24,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 from pyspark.storagelevel import StorageLevel
 
-from ecc_spark.udfs import clean_text_udf, phrase_match_udf
+from ecc_spark.udfs import page_matches_udf
 
-_PERSISTED: list = []  # build_matches' enriched frame from the previous call
+_PERSISTED: list = []  # build_matches' enriched frame and broadcast from the previous call
 
 
 def _first_writer(df: DataFrame, keys: list[str], order_cols: list[str]) -> DataFrame:
@@ -68,8 +66,6 @@ def seed_title_map(seeds: DataFrame) -> DataFrame:
         ["seed_idx"] if "seed_idx" in s.columns else []
     ))
     if "seed_idx" in s.columns:
-        from pyspark.sql.window import Window as W
-
         w = W.partitionBy("title").orderBy(F.col("seed_idx").desc())
         out = (
             out.withColumn("_rn", F.row_number().over(w))
@@ -100,130 +96,96 @@ def build_matches(
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Returns (pages, matches, mentions).
 
-    ``documents``: (doc_id, redirect, spans[, doc_seq]) — doc_seq is the
-    dump order, carried through to matches as (doc_seq, match_seq) so the
-    phase-2 RNG-parity mode can reproduce the reference's insertion order.
+    ``documents``: (doc_id, redirect, spans[, hidden_links][, doc_seq]) —
+    doc_seq is the dump order, carried through to matches as (doc_seq,
+    match_seq) so the phase-2 RNG-parity mode can reproduce the
+    reference's insertion order.
     """
-    has_seq = "doc_seq" in documents.columns
+    seq = ["doc_seq"] if "doc_seq" in documents.columns else []
     docs = documents.filter(
         F.col("doc_id").isNotNull() & F.col("spans").isNotNull()  # OPS-7
     ).filter(~F.col("doc_id").rlike(NAMESPACE_RE))  # OPS-8
 
-    t2m = seed_title_map(seeds)
+    title_map: dict[str, list[tuple[str, str]]] = {}
+    for r in seed_title_map(seeds).collect():
+        title_map.setdefault(r["title"], []).append((r["mid"], r["label"]))
+    title_map_bc = documents.sparkSession.sparkContext.broadcast(title_map)
 
-    links = docs.select(
-        "doc_id",
-        F.explode(F.filter("spans", lambda s: s.kind == F.lit("link"))).alias("l"),
-    ).select(
-        "doc_id",
-        F.col("l.text").alias("mention"),  # anchor text (ref :261 — falls back
-        F.col("l.media_ref").alias("target"),  # to target; ingest guarantees text)
-    )
-    has_hidden = "hidden_links" in documents.columns
-    if has_hidden:
+    links = [F.filter("spans", lambda s: s.kind == F.lit("link"))]
+    if "hidden_links" in documents.columns:
         # links inside templates/refs feed the mention map but never the
         # plain text — reference cmd/build_matches_db.py:251-266 collects
         # wikilinks from the WHOLE AST while plain_text() excludes them
-        links = links.unionByName(
-            docs.select("doc_id", F.explode("hidden_links").alias("l")).select(
-                "doc_id",
-                F.col("l.text").alias("mention"),
-                F.col("l.media_ref").alias("target"),
-            )
-        )
-
-    # OPS-13: probe side may be 10^10 links; build side is the seed list
-    entity_links = links.join(F.broadcast(t2m), links.target == t2m.title, "inner")
-
-    # OPS-18 ambiguity drop, then per-doc mention map
-    per_mention = entity_links.groupBy("doc_id", "mention").agg(
-        F.collect_set(F.struct("mid", "label")).alias("mids"),
-        F.count("*").alias("n_links"),
-    )
-    per_doc = per_mention.groupBy("doc_id").agg(
-        F.sum("n_links").cast("int").alias("entity_link_count"),
-        F.count("*").cast("int").alias("mention_count"),
-        F.map_from_entries(
-            F.filter(
-                F.collect_list(
-                    F.when(
-                        F.size("mids") == 1,
-                        F.struct(F.col("mention"), F.element_at("mids", 1).alias("entry")),
-                    )
-                ),
-                lambda x: x.isNotNull(),
-            )
-        ).alias("m2m"),
-    )
+        links.append(F.coalesce("hidden_links", F.array()))
+    # anchor text (ref :261 — falls back to the target; ingest guarantees
+    # text) and target of every link
+    mentions = F.concat(*(F.transform(a, lambda l: l.text) for a in links))
+    targets = F.concat(*(F.transform(a, lambda l: l.media_ref) for a in links))
 
     enriched = (
-        docs.join(per_doc, "doc_id", "left")
-        .withColumn("m2m", F.coalesce("m2m", F.map_from_arrays(F.array(), F.array())))
-        .withColumn("entity_link_count", F.coalesce("entity_link_count", F.lit(0)))
-        .withColumn("mention_count", F.coalesce("mention_count", F.lit(0)))
-        .withColumn(
-            "link_count",
-            F.size(F.filter("spans", lambda s: s.kind == F.lit("link")))
-            + (
-                F.coalesce(F.size("hidden_links"), F.lit(0))
-                if has_hidden
-                else F.lit(0)
-            ),
+        docs.select(
+            "doc_id",
+            *seq,
+            plain_text_col("spans").alias("page_text"),
+            mentions.alias("mentions"),
+            targets.alias("targets"),
         )
-        .withColumn("page_text", plain_text_col("spans"))
-        .withColumn("clean_text", clean_text_udf("page_text"))
-        .withColumn("patterns", F.map_keys("m2m"))
-        .withColumn("match_arr", phrase_match_udf("clean_text", "patterns"))
+        .select(
+            "doc_id",
+            *seq,
+            F.size("mentions").alias("link_count"),
+            F.length("page_text").cast("int").alias("text_len"),
+            page_matches_udf(title_map_bc)("page_text", "mentions", "targets").alias("p"),
+        )
+        .select("doc_id", *seq, "link_count", "text_len", "p.*")
     )
     # pages, matches, and mentions all derive from this frame; without a
-    # materialization each consumer re-runs the clean_text/phrase_match
-    # pandas UDFs over the whole corpus (3 full Python passes measured in
-    # the phase-1+2 plan; the CLI's three table writes pay the same).
+    # materialization each consumer re-runs the page UDF over the whole
+    # corpus (the CLI's three table writes would pay it three times).
     # Janitor-scoped: the next build_matches call frees this one's cache.
     while _PERSISTED:
         _PERSISTED.pop().unpersist(False)
     enriched = enriched.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(enriched)
+    _PERSISTED.extend([enriched, title_map_bc])
 
     pages = _first_writer(
         enriched.select(
             F.col("doc_id").alias("title"),
-            *(["doc_seq"] if has_seq else []),
+            *seq,
             F.col("clean_text").alias("text"),
             "link_count",
             "entity_link_count",
             "mention_count",
-            F.size("patterns").alias("unique_mention_count"),
-            F.length("page_text").cast("int").alias("text_len"),
+            F.size("entries").alias("unique_mention_count"),
+            "text_len",
             F.length("clean_text").cast("int").alias("clean_text_len"),
             F.size("match_arr").alias("match_count"),
         ),
         ["title"],  # PK, first-writer-wins in dump order (ref dao/matches_db.py:42,53)
         ["doc_seq"],
-    ).drop(*(["doc_seq"] if has_seq else []))
+    ).drop(*seq)
 
     m = enriched.select(
         F.col("doc_id").alias("page"),
-        *(["doc_seq"] if has_seq else []),
+        *seq,
         "clean_text",
-        "m2m",
         F.posexplode("match_arr").alias("match_seq", "mt"),
-    ).withColumn("entry", F.element_at("m2m", F.col("mt.mention")))
+    )
     # divergence from reference: an unmapped match surface raises KeyError
     # there (page skipped via the exception channel, :319-320); we drop the
-    # match row — cannot occur when surfaces equal patterns (our tokenizer
-    # joins tokens with the original text slice)
-    m = m.filter(F.col("entry").isNotNull())
+    # match row. It needs a surface whose tokens equal a mention's while
+    # its text differs (e.g. inner whitespace).
+    m = m.filter(F.col("mt.mid").isNotNull())
 
     start, end = F.col("mt.start_char"), F.col("mt.end_char")
     ctx_start0 = F.greatest(start - DEBUG_CONTEXT_PAD, F.lit(0))  # 0-based, ref :295
     ctx_end0 = F.least(end + DEBUG_CONTEXT_PAD, F.length("clean_text"))
     matches = m.select(
-        F.col("entry.mid").alias("mid"),
-        F.col("entry.label").alias("entity_label"),
+        F.col("mt.mid").alias("mid"),
+        F.col("mt.label").alias("entity_label"),
         F.col("mt.mention").alias("mention"),
         "page",
-        *(["doc_seq"] if has_seq else []),
+        *seq,
         "match_seq",
         start.alias("start_char"),
         end.alias("end_char"),
@@ -235,11 +197,11 @@ def build_matches(
     )
 
     mentions = (
-        enriched.select(F.explode("m2m").alias("mention", "entry"))
+        enriched.select(F.explode("entries").alias("e"))
         .select(
-            F.col("entry.mid").alias("mid"),
-            F.col("entry.label").alias("entity_label"),
-            "mention",
+            F.col("e.mid").alias("mid"),
+            F.col("e.label").alias("entity_label"),
+            F.col("e.mention").alias("mention"),
         )
         .dropDuplicates(["mid", "mention"])  # UNIQUE (ref :131,147-149)
     )

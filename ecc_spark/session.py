@@ -50,11 +50,11 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         # Guide §3.1/§9: allow the planner to pick a shuffled hash join
         # where its size conditions hold instead of always sort-merge —
-        # no sort on either side.  Measured at sf1.0: tpch_q3 2.18→1.93s,
-        # bucketed_join 0.43→0.34s, never slower.  AQE's skew-join
-        # splitting (enabled above) covers shuffled-hash joins too, and
-        # the planner still falls back to SMJ when a build side is too
-        # big to hash — the safe default at any scale.
+        # no sort on either side.  An interleaved A/B at sf1.0 measured
+        # it neutral (within 1-3% both ways, OPTIMIZATION_r06.md); it is
+        # kept as the production default.  AQE's skew-join splitting
+        # (enabled above) covers shuffled-hash joins too, and the planner
+        # still falls back to SMJ when a build side is too big to hash.
         .config("spark.sql.join.preferSortMergeJoin", "false")
         # Input split size stays at the Spark default (128m): the local
         # testdata is row-group-bound anyway (load_split covers the

@@ -6,11 +6,13 @@ multi-pattern phrase matching to spaCy (``en_core_web_lg``), which is a
 This module is the engine's replacement: small, pure-Python, rule-based,
 and — critically — used by BOTH the vectorized pandas UDFs (ecc_spark.udfs)
 and the golden-fixture generator (tests), so span parity is by
-construction.
+construction. Tokens and sentence ends are compiled regexes;
+tests/ref_text.py states the same rules one character at a time and
+serves as their oracle.
 
 Semantics mirrored from the reference (behavior, not code):
-- tokenize: word = maximal run of alphanumerics (plus ``'`` and ``#``
-  inside a word); any other non-space char is a single-char token.
+- tokenize: word = maximal run of alphanumerics, ``_``, ``'`` and ``#``;
+  any other non-space char is a single-char token.
   (#' kept word-internal so masked text re-tokenizes to the masked span.)
 - sentencize: a sentence ends at ``. ! ?`` (possibly repeated, possibly
   followed by closing quotes/brackets) when followed by whitespace or
@@ -23,6 +25,7 @@ Semantics mirrored from the reference (behavior, not code):
 
 from __future__ import annotations
 
+import re
 from typing import NamedTuple
 
 
@@ -38,79 +41,35 @@ class Sentence(NamedTuple):
     end: int
 
 
-_WORD_CHARS = set("abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789_'#")
-
-
-def _is_word_char(ch: str) -> bool:
-    return ch in _WORD_CHARS or ch.isalnum()
+# For str patterns \w is exactly ``ch.isalnum() or ch == "_"`` and \s is
+# exactly ``ch.isspace()``.
+_TOKEN_RE = re.compile(r"[\w'#]+|\S")
+_SENT_END_RE = re.compile(r"\n|[.!?]+[\"')\]»”’]*(?=\s|\Z)")
 
 
 def tokenize(text: str) -> list[Token]:
     """Word / single-punct tokens with char spans; whitespace skipped."""
-    tokens: list[Token] = []
-    i, n = 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch.isspace():
-            i += 1
-            continue
-        if _is_word_char(ch):
-            j = i + 1
-            while j < n and _is_word_char(text[j]):
-                j += 1
-            tokens.append(Token(text[i:j], i, j))
-            i = j
-        else:
-            tokens.append(Token(ch, i, i + 1))
-            i += 1
-    return tokens
-
-
-_SENT_END = {".", "!", "?"}
-_SENT_TRAIL = {'"', "'", ")", "]", "»", "”", "’"}
+    return [Token(m.group(), m.start(), m.end()) for m in _TOKEN_RE.finditer(text)]
 
 
 def sentencize(text: str) -> list[Sentence]:
-    """Split into sentences; newline is always a boundary."""
+    """Split into sentences; newline is always a boundary. Sentences are
+    whitespace-trimmed with honest offsets; blank ones are dropped."""
     sents: list[Sentence] = []
-    n = len(text)
     start = 0
-    i = 0
-    while i < n:
-        ch = text[i]
-        if ch == "\n":
-            if text[start:i].strip():
-                sents.append(_mk_sent(text, start, i))
-            start = i + 1
-            i += 1
-            continue
-        if ch in _SENT_END:
-            j = i + 1
-            while j < n and text[j] in _SENT_END:
-                j += 1
-            while j < n and text[j] in _SENT_TRAIL:
-                j += 1
-            if j >= n or text[j].isspace():
-                if text[start:j].strip():
-                    sents.append(_mk_sent(text, start, j))
-                start = j
-                i = j
-                continue
-            i = j
-            continue
-        i += 1
-    if text[start:].strip():
-        sents.append(_mk_sent(text, start, n))
+    for m in _SENT_END_RE.finditer(text):
+        _add_sent(sents, text, start, m.start() if m.group() == "\n" else m.end())
+        start = m.end()
+    _add_sent(sents, text, start, len(text))
     return sents
 
 
-def _mk_sent(text: str, start: int, end: int) -> Sentence:
-    # trim leading/trailing whitespace but keep offsets honest
-    while start < end and text[start].isspace():
-        start += 1
-    while end > start and text[end - 1].isspace():
-        end -= 1
-    return Sentence(text[start:end], start, end)
+def _add_sent(sents: list[Sentence], text: str, start: int, end: int) -> None:
+    seg = text[start:end]
+    body = seg.strip()
+    if body:
+        s0 = start + len(seg) - len(seg.lstrip())
+        sents.append(Sentence(body, s0, s0 + len(body)))
 
 
 class Match(NamedTuple):
@@ -141,7 +100,6 @@ def phrase_match(text: str, patterns: list[str] | dict[tuple[str, ...], str]) ->
     toks = tokenize(text)
     if not toks:
         return []
-    max_len = max(len(k) for k in table)
     by_first: dict[str, list[tuple[str, ...]]] = {}
     for k in table:
         by_first.setdefault(k[0], []).append(k)
@@ -154,7 +112,6 @@ def phrase_match(text: str, patterns: list[str] | dict[tuple[str, ...], str]) ->
                 sc, ec = toks[i].start, toks[i + L - 1].end
                 out.append(Match(i, i + L, sc, ec, text[sc:ec]))
     out.sort(key=lambda m: (m.start_tok, m.end_tok))
-    _ = max_len
     return out
 
 

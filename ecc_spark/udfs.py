@@ -6,11 +6,14 @@ here as Arrow-batched pandas UDFs over ecc_spark.text — the only Python
 that runs on executors. No per-row Python UDFs anywhere in the engine
 (BASELINE.json input_hint).
 
-Batch-level optimization mirroring the reference's per-page matcher build
-(cmd/build_matches_db.py:273-274): the phrase-match UDFs build ONE
-automaton per distinct pattern set within an Arrow batch, not per row —
-patterns arrive as an array column, and rows of the same page/entity
-share the object via a key-cache.
+Phase 1 crosses the Python boundary once per page: ``page_matches_udf``
+builds the page's mention map from its links, cleans its text and
+phrase-matches the unambiguous mentions, as the reference's per-page
+worker does (cmd/build_matches_db.py:237-320). Phase 2 crosses it once
+per context in ``crop_mask_udf``, whose matchers are built once per
+distinct pattern set within an Arrow batch via a key-cache.
+``clean_text_udf`` and ``phrase_match_udf`` remain as the single-step
+operators that ops/pipeline_ops.py exposes as registry queries.
 """
 
 from __future__ import annotations
@@ -55,6 +58,64 @@ def _matcher_cache():
         return m
 
     return get
+
+
+# entries: the unambiguous mention → (mid, label) map (OPS-18);
+# match_arr: every phrase match in text order, with mid/label null when
+# the matched surface is not itself a mention key
+PAGE_MATCHES = (
+    "entity_link_count int, mention_count int,"
+    " entries array<struct<mention: string, mid: string, label: string>>,"
+    " clean_text string,"
+    " match_arr array<struct<start_char: int, end_char: int, mention: string,"
+    " mid: string, label: string>>"
+)
+_PAGE_MATCHES_COLS = ["entity_link_count", "mention_count", "entries", "clean_text", "match_arr"]
+
+
+def page_matches(page_text: str, mentions, targets, title_map: dict) -> tuple:
+    """One page of the reference's per-page worker
+    (cmd/build_matches_db.py:251-297): entity links are the links whose
+    target is a seed title; a mention mapping to more than one distinct
+    (mid, label) is ambiguous and dropped; the cleaned text is matched
+    against the remaining mentions. ``title_map`` maps a title to its
+    (mid, label) list. Returns the PAGE_MATCHES fields."""
+    mids: dict[str, set] = {}
+    entity_links = 0
+    for mention, target in zip(mentions, targets):
+        for entry in title_map.get(target, ()):
+            mids.setdefault(mention, set()).add(entry)
+            entity_links += 1
+    m2e = {m: next(iter(es)) for m, es in mids.items() if len(es) == 1}
+    clean = X.clean_up_text(page_text)
+    found = X.phrase_match(clean, X.build_matcher(list(m2e)))
+    matches = []
+    for m in found:
+        mid, label = m2e.get(m.mention, (None, None))
+        matches.append(
+            {"start_char": m.start_char, "end_char": m.end_char,
+             "mention": m.mention, "mid": mid, "label": label}
+        )
+    entries = [{"mention": k, "mid": mid, "label": label} for k, (mid, label) in m2e.items()]
+    return entity_links, len(mids), entries, clean, matches
+
+
+def page_matches_udf(title_map):
+    """The phase-1 page UDF over (page_text, link mentions, link targets);
+    ``title_map`` is a Spark broadcast of the seed-title map, so it
+    reaches each Python worker once per call, not once per batch."""
+
+    @F.pandas_udf(PAGE_MATCHES)
+    def page_matches_pudf(
+        page_text: pd.Series, mentions: pd.Series, targets: pd.Series
+    ) -> pd.DataFrame:
+        t2m = title_map.value
+        rows = [page_matches(*r, t2m) for r in zip(page_text, mentions, targets)]
+        return pd.DataFrame(rows, columns=_PAGE_MATCHES_COLS)
+
+    # optimizer fence, as for crop_mask_udf below: every output field is
+    # extracted from ONE evaluation per page
+    return page_matches_pudf.asNondeterministic()
 
 
 @F.pandas_udf(T.StringType())

@@ -91,6 +91,12 @@ def _parse_page_udf(record: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=["title", "redirect", "markup"])
 
 
+# optimizer fence, as for udfs.crop_mask_udf: without it CollapseProject
+# inlines the struct-returning UDF into both the wikipedia_pages filter
+# and its projection, parsing every page twice
+_parse_page_udf = _parse_page_udf.asNondeterministic()
+
+
 def _resolve_parts(path) -> list[str]:
     """Resolve ``path`` to an ORDERED list of dump part files.
 

@@ -183,6 +183,46 @@ def test_duplicate_title_first_writer_wins(spark):
     assert "First version" in dup[0]["text"]
 
 
+def test_hidden_links_feed_mention_map_only(spark):
+    """A seed linked only inside {{…}} and <ref> still seeds the mention
+    map and the link counts (reference cmd/build_matches_db.py:251-266
+    walks the whole AST), but the template text itself never reaches the
+    plain text, so its surface yields no match."""
+    from ecc_spark.ingest import ingest_markup
+
+    markup = (
+        "The Seed Page museum stands on the long northern bank of the river."
+        "{{Infobox town|near=[[Seed Page|Seedville]]}}"
+        " It also keeps [[Other Page|another exhibit]] open for the public all year."
+        "<ref>See [[Seed Page]] for details.</ref>"
+    )
+    docs = ingest_markup(
+        spark.createDataFrame(
+            [("Host", None, markup, 0)],
+            schema="doc_id string, redirect string, markup string, doc_seq long",
+        )
+    )
+    seeds = spark.createDataFrame(
+        [("m1", "Seed", "http://en.wikipedia.org/wiki/Seed_Page")],
+        schema="mid string, label string, wikipedia string",
+    )
+    pages, matches, mentions = build_matches(docs, seeds)
+
+    (page,) = pages.collect()
+    assert "Seedville" not in page["text"]
+    assert page["link_count"] == 3  # one visible + two hidden
+    assert page["entity_link_count"] == 2  # both hidden seed links
+    assert page["mention_count"] == 2
+    assert page["unique_mention_count"] == 2
+    assert sorted(tuple(r) for r in mentions.collect()) == [
+        ("m1", "Seed", "Seed Page"),
+        ("m1", "Seed", "Seedville"),
+    ]
+    got = [(r["mention"], r["start_char"]) for r in matches.collect()]
+    assert got == [("Seed Page", 4)]
+    assert page["match_count"] == 1
+
+
 def test_interleave_stream_matches_pure_python(spark):
     """Interleaved token stream vs an independent mirror over the same
     spans: token lists identical, every media sentinel at its recorded

@@ -60,3 +60,80 @@ def test_quality_score_stays_in_codegen(spark):
     plan = _plan(spark, "quality_score")
     assert "*(" in plan
     assert "EvalPython" not in plan
+
+
+def _subtrees(plan: str, marker: str) -> list[list[str]]:
+    """For every plan line holding ``marker``: that line plus its subtree
+    (the deeper-indented lines that follow it)."""
+    lines = plan.splitlines()
+
+    def depth(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    out = []
+    for i, head in enumerate(lines):
+        if marker not in head:
+            continue
+        sub = [head]
+        for line in lines[i + 1 :]:
+            if depth(line) <= depth(head):
+                break
+            sub.append(line)
+        out.append(sub)
+    return out
+
+
+def test_build_matches_is_one_narrow_page_pass(spark):
+    """Phase 1 crosses into Python once per page, over the documents scan
+    with no shuffle before it, and caches only what its outputs read."""
+    from ecc_spark.fixtures import corpus_dataframes
+    from ecc_spark.matches import build_matches
+
+    documents, seeds, _, _, _ = corpus_dataframes(spark, n_docs=20, n_seeds=5, seed=3)
+    pages, _, _ = build_matches(documents, seeds)
+    plan = pages._jdf.queryExecution().executedPlan().toString()
+    (python_node,) = _subtrees(plan, "EvalPython")
+    assert "page_matches" in python_node[0], plan
+    assert not any("Exchange" in line for line in python_node), plan
+    (cached,) = [line for line in plan.splitlines() if "InMemoryRelation" in line]
+    for fat in ("spans#", "hidden_links#", "redirect#", "page_text#"):
+        assert fat not in cached, cached
+
+
+def test_xml_pages_parse_each_page_once(spark, tmp_path):
+    """The page filter and projection share one XML parse per page."""
+    from ecc_spark import gen
+    from ecc_spark.wiki_xml import read_wikipedia_xml, wikipedia_pages
+
+    xml = str(tmp_path / "dump.xml")
+    gen.wiki_xml(xml, n_docs=20, n_seeds=5, seed=3)
+    df = wikipedia_pages(read_wikipedia_xml(spark, xml))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    parses = [line for line in plan.splitlines() if "_parse_page_udf(" in line]
+    assert len(parses) == 1 and "EvalPython" in parses[0], plan
+
+
+def test_contexts_pattern_join_is_broadcast(spark):
+    """The per-entity pattern table joins by an explicit broadcast, not
+    by the size estimate: with automatic broadcasts off it still does."""
+    from ecc_spark.contexts import build_contexts
+    from ecc_spark.fixtures import corpus_dataframes
+    from ecc_spark.matches import build_matches
+
+    documents, seeds, seed_items, mid2rid, _ = corpus_dataframes(
+        spark, n_docs=20, n_seeds=5, seed=3
+    )
+    pages, matches, mentions = build_matches(documents, seeds)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        ctx = build_contexts(spark, matches, pages, mentions, seed_items, mid2rid)
+        plan = ctx._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+    assert any(
+        "collect_set" in line
+        for sub in _subtrees(plan, "BroadcastExchange")
+        for line in sub
+    ), plan

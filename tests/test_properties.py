@@ -1,6 +1,7 @@
 """Property-based tests (hypothesis) for the seams most prone to silent
 off-by-ones: SQLite SUBSTR window algebra vs Python slicing (SURVEY.md
-§7.3 risk 4), tokenizer span integrity, masking invariants, URL
+§7.3 risk 4), tokenizer span integrity, the regex tokenizer and
+sentencizer against their per-character oracle, masking invariants, URL
 canonicalization idempotence, and bloom membership completeness."""
 
 from __future__ import annotations
@@ -12,6 +13,7 @@ from hypothesis import strategies as st
 
 from ecc_spark import text as X
 from ecc_spark.crawl.canonical import canonicalize_py
+from tests import ref_text
 
 TEXTS = st.text(
     alphabet=st.characters(whitelist_categories=("Lu", "Ll", "Nd", "Zs", "Po")),
@@ -69,6 +71,28 @@ def test_sentencize_covers_nonspace(text):
     for i, ch in enumerate(text):
         if not ch.isspace():
             assert covered[i], (text, i)
+
+
+# the characters where a regex class and a per-character predicate could
+# disagree: digits of other scripts, unicode whitespace, the extra word
+# characters, sentence ends and every closing quote/bracket right after one
+ORACLE_TEXTS = st.lists(
+    st.one_of(
+        st.sampled_from(
+            list("aZ09٣²½_'#.!?\n \t\x1c\x85　\xa0-,(")
+            + ["." + q for q in sorted(ref_text.SENT_TRAIL)]
+        ),
+        st.characters(),
+    ),
+    max_size=80,
+).map("".join)
+
+
+@given(ORACLE_TEXTS)
+@settings(max_examples=2000, deadline=None)
+def test_regex_tokenizer_equals_per_character_oracle(text):
+    assert X.tokenize(text) == ref_text.tokenize(text)
+    assert X.sentencize(text) == ref_text.sentencize(text)
 
 
 @given(TEXTS, st.lists(st.text(st.characters(whitelist_categories=("Lu", "Ll")), min_size=1, max_size=8), min_size=1, max_size=4))
